@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Wire-up: `spark.sql.extensions=graft.GraftExtensions` on any session
   * (cluster-wide via spark-defaults), or [[GraftExtensions.register]] on an
-  * already-running session — the CLI and tests use the latter.
+  * already-running session — [[Session.local]] uses the latter.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.core.Json.quote
 import graft.core.MinervaType
 import graft.model.InstanceModel
 import graft.operators._
@@ -20,33 +21,7 @@ import org.apache.spark.sql.functions._
   *   materialize <storeBase> <sourcePart> <targetPart> <granSec>
   */
 object Main {
-  def spark(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // YAML fragments (generated trends, trigger rules) compile via expr();
-    // registering here puts fvec_dot/fvec_topk in their reach
-    graft.GraftExtensions.register(s)
-    s
-  }
-
-  /** JSON string escape shared by every CLI emitter (names come from
-    * free-form YAML — raw interpolation would emit invalid JSON). */
-  private def js(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  def spark(): SparkSession = graft.Session.local(graft.Session.cores(4))
 
   private def jarr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
 
@@ -414,13 +389,13 @@ object Main {
           }
           java.nio.file.Files.createDirectories(dir)
           java.nio.file.Files.writeString(f, text)
-          println(s"""{"materialization":${js(m.targetTrendStorePart)},"${
+          println(s"""{"materialization":${quote(m.targetTrendStorePart)},"${
             if (action == "create") "created" else "updated"}":true}""")
         case "drop" =>
           val name = arg("a name")
           val existed = java.nio.file.Files.deleteIfExists(
             dir.resolve(s"${triggerSlug(name)}.yaml"))
-          println(s"""{"materialization":${js(name)},"dropped":$existed}""")
+          println(s"""{"materialization":${quote(name)},"dropped":$existed}""")
         case "list" =>
           val files =
             if (!java.nio.file.Files.isDirectory(dir)) Seq.empty[String]
@@ -428,7 +403,7 @@ object Main {
           println(files.map { f =>
             val m = InstanceModel.parseMaterialization(
               java.nio.file.Files.readString(dir.resolve(f)))
-            s"""{"name":${js(m.targetTrendStorePart)},"enabled":${m.enabled},""" +
+            s"""{"name":${quote(m.targetTrendStorePart)},"enabled":${m.enabled},""" +
               s""""sources":${m.sources.length}}"""
           }.mkString("[", ",", "]"))
       }
@@ -558,9 +533,9 @@ object Main {
       // changePart with no stored state = fresh sidecar of the declared
       // schema (get_or_create_trend_store_part)
       missing.foreach(p => TrendMigration.changePart(ps, p, force = false))
-      println(s"""{"trend_store":${js(ts.title)},"${
+      println(s"""{"trend_store":${quote(ts.title)},"${
         if (action == "create") "created" else "added"}":${
-        jarr(missing.map(p => js(p.name)))}}""")
+        jarr(missing.map(p => quote(p.name)))}}""")
 
     // `minerva trend-store delete` (commands/trend_store/delete.py): drop
     // every part of the definition — sidecar + partition dirs + crash
@@ -571,8 +546,8 @@ object Main {
         java.nio.file.Files.readString(java.nio.file.Paths.get(defFile)))
       val ps = new PartStore(s, PartStoreConfig(base, 86400))
       val deleted = ts.parts.map(_.name).filter(ps.deletePart)
-      println(s"""{"trend_store":${js(ts.title)},"deleted":${
-        jarr(deleted.map(js))}}""")
+      println(s"""{"trend_store":${quote(ts.title)},"deleted":${
+        jarr(deleted.map(quote))}}""")
 
     // `minerva trend-store list` (commands/trend_store/list.py): stored
     // parts with their column counts — one directory listing + sidecar
@@ -582,7 +557,7 @@ object Main {
       val ps = new PartStore(s, PartStoreConfig(base, 86400))
       val parts = ps.listParts().map { p =>
         val cols = ps.sidecarSchema(p).map(_.fields.length)
-        s"""{"name":${js(p)},"columns":${cols.getOrElse(-1)}}"""
+        s"""{"name":${quote(p)},"columns":${cols.getOrElse(-1)}}"""
       }
       println(jarr(parts))
 
@@ -592,9 +567,9 @@ object Main {
     case "trend-store" :: "list-config" :: instanceDir :: Nil =>
       val inst = InstanceModel.loadInstance(instanceDir)
       println(inst.trendStores.map { ts =>
-        s"""{"title":${js(ts.title)},"data_source":${js(ts.dataSource)},""" +
-          s""""entity_type":${js(ts.entityType)},""" +
-          s""""granularity":${js(ts.granularity.name)},""" +
+        s"""{"title":${quote(ts.title)},"data_source":${quote(ts.dataSource)},""" +
+          s""""entity_type":${quote(ts.entityType)},""" +
+          s""""granularity":${quote(ts.granularity.name)},""" +
           s""""parts":${ts.parts.length}}"""
       }.mkString("[", ",", "]"))
 
@@ -619,23 +594,23 @@ object Main {
       val parts = ts.parts.map { p =>
         val stored = ps.sidecarSchema(p.name)
         val trends = p.trends.map(t =>
-          s"""{"name":${js(t.name)},"data_type":${js(t.dataType.name)},""" +
-            s""""time_aggregation":${js(t.timeAggregation)},""" +
-            s""""entity_aggregation":${js(t.entityAggregation)}}""")
+          s"""{"name":${quote(t.name)},"data_type":${quote(t.dataType.name)},""" +
+            s""""time_aggregation":${quote(t.timeAggregation)},""" +
+            s""""entity_aggregation":${quote(t.entityAggregation)}}""")
         val gen = p.generatedTrends.map(g =>
-          s"""{"name":${js(g.name)},"data_type":${js(g.dataType.name)},""" +
-            s""""expression":${js(g.expression)}}""")
+          s"""{"name":${quote(g.name)},"data_type":${quote(g.dataType.name)},""" +
+            s""""expression":${quote(g.expression)}}""")
         val cols = stored.toSeq.flatMap(_.fields.toSeq).map(f =>
-          s"""{"name":${js(f.name)},"type":${js(f.dataType.simpleString)}}""")
-        s"""{"name":${js(p.name)},"stored":${stored.nonEmpty},""" +
+          s"""{"name":${quote(f.name)},"type":${quote(f.dataType.simpleString)}}""")
+        s"""{"name":${quote(p.name)},"stored":${stored.nonEmpty},""" +
           s""""trends":${jarr(trends)},"generated_trends":${jarr(gen)},""" +
           s""""stored_columns":${jarr(cols)}}"""
       }
       println(
-        s"""{"title":${js(ts.title)},"data_source":${js(ts.dataSource)},""" +
-          s""""entity_type":${js(ts.entityType)},""" +
-          s""""granularity":${js(ts.granularity.name)},""" +
-          s""""partition_size":${js(ts.partitionSize.name)},""" +
+        s"""{"title":${quote(ts.title)},"data_source":${quote(ts.dataSource)},""" +
+          s""""entity_type":${quote(ts.entityType)},""" +
+          s""""granularity":${quote(ts.granularity.name)},""" +
+          s""""partition_size":${quote(ts.partitionSize.name)},""" +
           s""""parts":${jarr(parts)}}""")
 
     // `minerva aggregation generate-standard-aggregations`
@@ -726,12 +701,12 @@ object Main {
       action match {
         case "create" =>
           val n = name
-          println(s"""{"entity_type":${js(n)},"created":${dir.create(n)}}""")
+          println(s"""{"entity_type":${quote(n)},"created":${dir.create(n)}}""")
         case "delete" =>
           val n = name
-          println(s"""{"entity_type":${js(n)},"deleted":${dir.delete(n)}}""")
+          println(s"""{"entity_type":${quote(n)},"deleted":${dir.delete(n)}}""")
         case "list" =>
-          println(dir.list().map(js).mkString("[", ",", "]"))
+          println(dir.list().map(quote).mkString("[", ",", "]"))
         case other =>
           System.err.println(s"unknown entity-type action: $other"); exit(2)
       }
@@ -747,17 +722,17 @@ object Main {
         case "create" =>
           val n = name
           val created = !fs.exists(p(n)) && fs.mkdirs(p(n))
-          println(s"""{"$kind":${js(n)},"created":$created}""")
+          println(s"""{"$kind":${quote(n)},"created":$created}""")
         case "delete" =>
           val n = name
           val deleted = fs.exists(p(n)) && fs.delete(p(n), true)
-          println(s"""{"$kind":${js(n)},"deleted":$deleted}""")
+          println(s"""{"$kind":${quote(n)},"deleted":$deleted}""")
         case "list" =>
           val d = new org.apache.hadoop.fs.Path(dir)
           val names =
             if (!fs.exists(d)) Seq.empty
             else fs.listStatus(d).map(_.getPath.getName).toSeq.sorted
-          println(names.map(js).mkString("[", ",", "]"))
+          println(names.map(quote).mkString("[", ",", "]"))
         case other =>
           System.err.println(s"unknown $kind action: $other"); exit(2)
       }
@@ -775,7 +750,7 @@ object Main {
       val name = s"${ad.dataSource}_${ad.entityType}"
       val created = graft.storage.AttributeStore.create(
         spark(), s"$base/attribute/$name", ad.attributes)
-      println(s"""{"attribute_store":${js(name)},"created":$created,""" +
+      println(s"""{"attribute_store":${quote(name)},"created":$created,""" +
         s""""attributes":${ad.attributes.length}}""")
       if (!created) {
         System.err.println(s"attribute store '$name' already exists — not overwritten")
@@ -787,7 +762,7 @@ object Main {
       val fs = graft.core.HadoopFs.forPath(s, base)
       val deleted = fs.delete(
         new org.apache.hadoop.fs.Path(s"$base/attribute/$name"), true)
-      println(s"""{"attribute_store":${js(name)},"deleted":$deleted}""")
+      println(s"""{"attribute_store":${quote(name)},"deleted":$deleted}""")
 
     case "attribute-store" :: "list" :: base :: Nil =>
       val s = spark()
@@ -797,7 +772,7 @@ object Main {
         if (!fs.exists(p)) Seq.empty
         else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
           .sorted.toSeq
-      println(names.map(js).mkString("[", ",", "]"))
+      println(names.map(quote).mkString("[", ",", "]"))
 
     // show: declared/stored columns + row counts of history and the
     // materialized snapshots (reference show, attribute_store.py:210-246)
@@ -807,10 +782,10 @@ object Main {
       val schema = st.history.map(_.schema).orElse(st.declaredSchema)
       val cols = schema.toSeq.flatMap(_.fields.toSeq)
         .filterNot(_.name == "abucket")
-        .map(f => s"""{"name":${js(f.name)},"type":${js(f.dataType.simpleString)}}""")
+        .map(f => s"""{"name":${quote(f.name)},"type":${quote(f.dataType.simpleString)}}""")
       val histRows = st.history.map(_.count()).getOrElse(0L)
       val curRows = st.currentSnapshot.map(_.count().toString).getOrElse("null")
-      println(s"""{"attribute_store":${js(name)},"columns":${
+      println(s"""{"attribute_store":${quote(name)},"columns":${
         cols.mkString("[", ",", "]")},"history_rows":$histRows,""" +
         s""""current_rows":$curRows}""")
 
@@ -834,14 +809,14 @@ object Main {
         val rows =
           if (flags.contains("--incremental")) st.materializeCurrentIncremental()
           else st.materializeCurrent()
-        s"""${js(n)}:$rows"""
+        s"""${quote(n)}:$rows"""
       }
       println(results.mkString("{", ",", "}"))
 
     case "attribute-store" :: "compact" :: base :: name :: Nil =>
       val st = new graft.storage.AttributeStore(
         spark(), s"$base/attribute/$name")
-      println(s"""{"attribute_store":${js(name)},"compacted_rows":${
+      println(s"""{"attribute_store":${quote(name)},"compacted_rows":${
         st.materializeCompacted()}}""")
 
     case "notification-store" :: "create" :: base :: yamlPath :: Nil =>
@@ -852,7 +827,7 @@ object Main {
       graft.storage.NotificationStore.create(
         s"$base/notification/$stem", defn.attributes,
         spark().sparkContext.hadoopConfiguration)
-      println(s"""{"notification_store":${js(stem)},"attributes":${defn.attributes.length}}""")
+      println(s"""{"notification_store":${quote(stem)},"attributes":${defn.attributes.length}}""")
 
     // `minerva notification-store delete` (commands/notification_store.py:
     // 88-115): drop the store wholesale — declaration + rows.
@@ -860,7 +835,7 @@ object Main {
       val fs = graft.core.HadoopFs.forPath(spark(), base)
       val deleted = fs.delete(
         new org.apache.hadoop.fs.Path(s"$base/notification/$name"), true)
-      println(s"""{"notification_store":${js(name)},"deleted":$deleted}""")
+      println(s"""{"notification_store":${quote(name)},"deleted":$deleted}""")
 
     // `minerva generate-sample-data` (commands/generate_sample_data.py):
     // render a definition's per-interval template to CSV files WITHOUT
@@ -926,21 +901,21 @@ object Main {
       val ps = new PartStore(s, PartStoreConfig(s"$base/trend", 86400))
       val trendParts = inst.trendStores.flatMap(_.parts).map { p =>
         val r = graft.storage.TrendMigration.changePart(ps, p, force)
-        s"""{"name":${js(p.name)},"added":${jarr(r.added.map(js))},""" +
-          s""""removed":${jarr(r.removed.map(js))},""" +
-          s""""changed":${jarr(r.changed.map(js))}}"""
+        s"""{"name":${quote(p.name)},"added":${jarr(r.added.map(quote))},""" +
+          s""""removed":${jarr(r.removed.map(quote))},""" +
+          s""""changed":${jarr(r.changed.map(quote))}}"""
       }
       val attrs = inst.attributeStores.map { ad =>
         val path = s"$base/attribute/${ad.dataSource}_${ad.entityType}"
         val created = graft.storage.AttributeStore.create(s, path, ad.attributes)
-        s"""{"store":${js(s"${ad.dataSource}_${ad.entityType}")},"created":$created}"""
+        s"""{"store":${quote(s"${ad.dataSource}_${ad.entityType}")},"created":$created}"""
       }
       val notifs = inst.notificationStores.map { nd =>
         val name = if (nd.name.nonEmpty) nd.name else nd.dataSource
         graft.storage.NotificationStore.create(
           s"$base/notification/$name", nd.attributes,
           s.sparkContext.hadoopConfiguration)
-        s"""{"store":${js(name)},"attributes":${nd.attributes.length}}"""
+        s"""{"store":${quote(name)},"attributes":${nd.attributes.length}}"""
       }
       println(
         s"""{"trend_store_parts":${jarr(trendParts)},""" +
@@ -960,65 +935,65 @@ object Main {
       // the document without loss: stores carry typed columns + aggregation
       // metadata, the other kinds their complete YAML-equivalent fields
       def trendJson(t: graft.model.Trend): String =
-        s"""{"name":${js(t.name)},"data_type":${js(t.dataType.name)},""" +
-          s""""description":${js(t.description)},""" +
-          s""""time_aggregation":${js(t.timeAggregation)},""" +
-          s""""entity_aggregation":${js(t.entityAggregation)}}"""
+        s"""{"name":${quote(t.name)},"data_type":${quote(t.dataType.name)},""" +
+          s""""description":${quote(t.description)},""" +
+          s""""time_aggregation":${quote(t.timeAggregation)},""" +
+          s""""entity_aggregation":${quote(t.entityAggregation)}}"""
       def jscalar(v: Any): String = v match {
         case null => "null"
         case b: java.lang.Boolean => b.toString
         case n: java.lang.Number => n.toString
-        case other => js(String.valueOf(other))
+        case other => quote(String.valueOf(other))
       }
       val trendStores = inst.trendStores.map { st =>
-        s"""{"title":${js(st.title)},"data_source":${js(st.dataSource)},""" +
-          s""""entity_type":${js(st.entityType)},"granularity":${js(st.granularity.name)},""" +
-          s""""partition_size":${js(st.partitionSize.name)},"parts":${jarr(st.parts.map { p =>
-            s"""{"name":${js(p.name)},"trends":${jarr(p.trends.map(trendJson))},""" +
+        s"""{"title":${quote(st.title)},"data_source":${quote(st.dataSource)},""" +
+          s""""entity_type":${quote(st.entityType)},"granularity":${quote(st.granularity.name)},""" +
+          s""""partition_size":${quote(st.partitionSize.name)},"parts":${jarr(st.parts.map { p =>
+            s"""{"name":${quote(p.name)},"trends":${jarr(p.trends.map(trendJson))},""" +
               s""""generated_trends":${jarr(p.generatedTrends.map(g =>
-                s"""{"name":${js(g.name)},"data_type":${js(g.dataType.name)},""" +
-                  s""""expression":${js(g.expression)}}"""))}}"""
+                s"""{"name":${quote(g.name)},"data_type":${quote(g.dataType.name)},""" +
+                  s""""expression":${quote(g.expression)}}"""))}}"""
           })}}"""
       }
       val attrStores = inst.attributeStores.map(a =>
-        s"""{"data_source":${js(a.dataSource)},"entity_type":${js(a.entityType)},""" +
+        s"""{"data_source":${quote(a.dataSource)},"entity_type":${quote(a.entityType)},""" +
           s""""attributes":${jarr(a.attributes.map(x =>
-            s"""{"name":${js(x.name)},"data_type":${js(x.dataType.name)}}"""))}}""")
+            s"""{"name":${quote(x.name)},"data_type":${quote(x.dataType.name)}}"""))}}""")
       // attributes are typed in the dump — `structure load` re-creates the
       // store's declaration from them, so names alone would lose fidelity
       val notifStores = inst.notificationStores.map(n =>
-        s"""{"name":${js(n.name)},"data_source":${js(n.dataSource)},""" +
-          s""""entity_type":${js(n.entityType)},""" +
+        s"""{"name":${quote(n.name)},"data_source":${quote(n.dataSource)},""" +
+          s""""entity_type":${quote(n.entityType)},""" +
           s""""attributes":${jarr(n.attributes.map(x =>
-            s"""{"name":${js(x.name)},"data_type":${js(x.dataType.name)}}"""))}}""")
+            s"""{"name":${quote(x.name)},"data_type":${quote(x.dataType.name)}}"""))}}""")
       val relations = inst.relations.map(r =>
-        s"""{"name":${js(r.name)},"source_entity_type":${js(r.sourceEntityType)},""" +
-          s""""target_entity_type":${js(r.targetEntityType)},"query":${js(r.query)}}""")
+        s"""{"name":${quote(r.name)},"source_entity_type":${quote(r.sourceEntityType)},""" +
+          s""""target_entity_type":${quote(r.targetEntityType)},"query":${quote(r.query)}}""")
       val virtualEntities = inst.virtualEntities.map(v =>
-        s"""{"name":${js(v.name)},"sql":${js(v.sql)}}""")
+        s"""{"name":${quote(v.name)},"sql":${quote(v.sql)}}""")
       val mats = inst.materializations.map(mz =>
-        s"""{"target_trend_store_part":${js(mz.targetTrendStorePart)},""" +
+        s"""{"target_trend_store_part":${quote(mz.targetTrendStorePart)},""" +
           s""""enabled":${mz.enabled},""" +
-          s""""processing_delay":${js(mz.processingDelay)},""" +
-          s""""stability_delay":${js(mz.stabilityDelay)},""" +
-          s""""reprocessing_period":${js(mz.reprocessingPeriod)},""" +
+          s""""processing_delay":${quote(mz.processingDelay)},""" +
+          s""""stability_delay":${quote(mz.stabilityDelay)},""" +
+          s""""reprocessing_period":${quote(mz.reprocessingPeriod)},""" +
           s""""sources":${jarr(mz.sources.map(src =>
-            s"""{"trend_store_part":${js(src.trendStorePart)},""" +
-              s""""mapping_function":${js(src.mappingFunction)}}"""))}""" +
-          mz.view.map(v => s""","view":${js(v)}""").getOrElse("") + "}")
+            s"""{"trend_store_part":${quote(src.trendStorePart)},""" +
+              s""""mapping_function":${quote(src.mappingFunction)}}"""))}""" +
+          mz.view.map(v => s""","view":${quote(v)}""").getOrElse("") + "}")
       val triggers = inst.triggers.map { t =>
-        s"""{"name":${js(t.name)},""" +
+        s"""{"name":${quote(t.name)},""" +
           s""""kpi_data":${jarr(t.kpiData.map(trendJson))},""" +
           s""""thresholds":${jarr(t.thresholds.map(th =>
-            s"""{"name":${js(th.name)},"data_type":${js(th.dataType.name)},""" +
+            s"""{"name":${quote(th.name)},"data_type":${quote(th.dataType.name)},""" +
               s""""value":${jscalar(th.value)}}"""))},""" +
-          s""""condition":${js(t.condition)},"weight":${js(t.weight)},""" +
-          s""""notification":${js(t.notification)},"data":${js(t.data)},""" +
-          s""""notification_store":${js(t.notificationStore)}""" +
-          t.granularity.map(g => s""","granularity":${js(g)}""").getOrElse("") +
+          s""""condition":${quote(t.condition)},"weight":${quote(t.weight)},""" +
+          s""""notification":${quote(t.notification)},"data":${quote(t.data)},""" +
+          s""""notification_store":${quote(t.notificationStore)}""" +
+          t.granularity.map(g => s""","granularity":${quote(g)}""").getOrElse("") +
           s""","trend_store_links":${jarr(t.trendStoreLinks.map(l =>
-            s"""{"part_name":${js(l.partName)},""" +
-              s""""mapping_function":${js(l.mappingFunction)}}"""))}}"""
+            s"""{"part_name":${quote(l.partName)},""" +
+              s""""mapping_function":${quote(l.mappingFunction)}}"""))}}"""
       }
       println(
         s"""{"trend_stores":${jarr(trendStores)},""" +
@@ -1045,7 +1020,7 @@ object Main {
             case _ => df0
           }
           val tagField = rest match {
-            case "--tag" :: tag :: Nil => s""","tag":${js(tag.toLowerCase)}"""
+            case "--tag" :: tag :: Nil => s""","tag":${quote(tag.toLowerCase)}"""
             case _ => ""
           }
           val r = df.agg(
@@ -1079,7 +1054,7 @@ object Main {
 
     case "tag" :: "flush" :: base :: tag :: Nil =>
       new graft.storage.TagDirectory(spark(), base).flushTag(tag)
-      println(s"""{"tag":${js(tag.toLowerCase)},"flushed":true}""")
+      println(s"""{"tag":${quote(tag.toLowerCase)},"flushed":true}""")
 
     case "tag" :: "list" :: base :: Nil =>
       val td = new graft.storage.TagDirectory(spark(), base)
@@ -1088,7 +1063,7 @@ object Main {
         .agg(count(lit(1)).as("n"))
         .orderBy("tag_group", "tag").collect()
       println(rows.map(r =>
-          s"""{"tag_group":${js(r.getString(0))},"tag":${js(r.getString(1))},"entities":${r.getLong(2)}}""")
+          s"""{"tag_group":${quote(r.getString(0))},"tag":${quote(r.getString(1))},"entities":${r.getLong(2)}}""")
         .mkString("[", ",", "]"))
 
     case "tag" :: "name-add" :: base :: csvPath :: Nil =>
@@ -1100,17 +1075,17 @@ object Main {
 
     case "tag" :: "name-flush" :: base :: tag :: Nil =>
       new graft.storage.TagDirectory(spark(), base).flushNameTag(tag)
-      println(s"""{"tag":${js(tag.toLowerCase)},"flushed":true}""")
+      println(s"""{"tag":${quote(tag.toLowerCase)},"flushed":true}""")
 
     case "tag" :: "name-list" :: base :: rest if rest.length <= 1 =>
       val td = new graft.storage.TagDirectory(spark(), base)
       rest match {
         case tag :: Nil =>
-          println(td.namesWithTag(tag).map(js).mkString("[", ",", "]"))
+          println(td.namesWithTag(tag).map(quote).mkString("[", ",", "]"))
         case _ =>
           val rows = td.nameLinks.orderBy("tag", "name").collect()
           println(rows.map(r =>
-              s"""{"tag":${js(r.getString(0))},"name":${js(r.getString(1))}}""")
+              s"""{"tag":${quote(r.getString(0))},"name":${quote(r.getString(1))}}""")
             .mkString("[", ",", "]"))
       }
 
@@ -1140,7 +1115,7 @@ object Main {
       }
       java.nio.file.Files.writeString(slugFile, text)
       java.nio.file.Files.writeString(dir.resolve(s"$slug.enabled"), "true")
-      println(s"""{"trigger":${js(t.name)},"created":true,"enabled":true}""")
+      println(s"""{"trigger":${quote(t.name)},"created":true,"enabled":true}""")
 
     // `minerva trigger update-weight|update-kpi-function|update-data-function`
     // (commands/trigger.py:124-253): load a NEW definition YAML and patch
@@ -1156,7 +1131,7 @@ object Main {
       val dir = java.nio.file.Paths.get(base, "trigger")
       val slugFile = dir.resolve(s"${triggerSlug(newDef.name)}.yaml")
       if (!java.nio.file.Files.exists(slugFile)) {
-        println(s"""{"error":"no such trigger","trigger":${js(newDef.name)}}""")
+        println(s"""{"error":"no such trigger","trigger":${quote(newDef.name)}}""")
         exit(1)
       }
       val installed = InstanceModel.parseTrigger(
@@ -1177,15 +1152,15 @@ object Main {
         InstanceModel.renderTrigger(patched))
       val enabled = java.nio.file.Files.exists(
         dir.resolve(s"${triggerSlug(newDef.name)}.enabled"))
-      println(s"""{"trigger":${js(newDef.name)},"updated":${
-        js(action.stripPrefix("update-"))},"enabled":$enabled}""")
+      println(s"""{"trigger":${quote(newDef.name)},"updated":${
+        quote(action.stripPrefix("update-"))},"enabled":$enabled}""")
 
     case "trigger" :: "delete" :: base :: name :: Nil =>
       val dir = java.nio.file.Paths.get(base, "trigger")
       val existed = java.nio.file.Files.deleteIfExists(
         dir.resolve(s"${triggerSlug(name)}.yaml"))
       java.nio.file.Files.deleteIfExists(dir.resolve(s"${triggerSlug(name)}.enabled"))
-      println(s"""{"trigger":${js(name)},"deleted":$existed}""")
+      println(s"""{"trigger":${quote(name)},"deleted":$existed}""")
 
     case "trigger" :: "list" :: base :: Nil =>
       val dir = java.nio.file.Paths.get(base, "trigger")
@@ -1199,8 +1174,8 @@ object Main {
         val en = java.nio.file.Files.exists(dir.resolve(s"$slug.enabled"))
         // granularity in the listing mirrors the reference's
         // `SELECT id, name, granularity, enabled` (trigger.py:253-266)
-        s"""{"name":${js(t.name)},"enabled":$en,"granularity":${
-          t.granularity.map(js).getOrElse("null")}}"""
+        s"""{"name":${quote(t.name)},"enabled":$en,"granularity":${
+          t.granularity.map(quote).getOrElse("null")}}"""
       }.mkString("[", ",", "]"))
 
     case "trigger" :: action :: base :: name :: Nil
@@ -1208,19 +1183,19 @@ object Main {
       val dir = java.nio.file.Paths.get(base, "trigger")
       val slug = triggerSlug(name)
       if (!java.nio.file.Files.exists(dir.resolve(s"$slug.yaml"))) {
-        println(s"""{"error":"no such trigger","trigger":${js(name)}}""")
+        println(s"""{"error":"no such trigger","trigger":${quote(name)}}""")
         exit(1)
       }
       if (action == "enable")
         java.nio.file.Files.writeString(dir.resolve(s"$slug.enabled"), "true")
       else java.nio.file.Files.deleteIfExists(dir.resolve(s"$slug.enabled"))
-      println(s"""{"trigger":${js(name)},"enabled":${action == "enable"}}""")
+      println(s"""{"trigger":${quote(name)},"enabled":${action == "enable"}}""")
 
     case "trigger" :: "execute" :: base :: name :: part :: outDir :: Nil =>
       val yaml = java.nio.file.Paths.get(base, "trigger",
         s"${triggerSlug(name)}.yaml")
       if (!java.nio.file.Files.exists(yaml)) {
-        println(s"""{"error":"no such trigger","trigger":${js(name)}}""")
+        println(s"""{"error":"no such trigger","trigger":${quote(name)}}""")
         exit(1)
       }
       run(List("trigger", s"$base/trend", part, yaml.toString, outDir))
@@ -1247,7 +1222,7 @@ object Main {
           .persist()
         try {
           out.write.mode("append").parquet(outDir)
-          s"""${js(t.name)}:${out.count()}"""
+          s"""${quote(t.name)}:${out.count()}"""
         } finally out.unpersist()
       }
       println(counts.mkString("{", ",", "}"))
@@ -1264,7 +1239,7 @@ object Main {
       }
       val counts = rels.map(r => r.name ->
         InstanceInit.materializeRelation(s, r, dir, s"$base/relation"))
-      println(counts.map { case (n, c) => s"${js(n)}:$c" }
+      println(counts.map { case (n, c) => s"${quote(n)}:$c" }
         .mkString("{", ",", "}"))
 
     // `minerva virtual-entity materialize` (commands/virtual_entity.py:
@@ -1276,7 +1251,7 @@ object Main {
       val dir = new graft.storage.EntityDirectory(s, s"$base/entity")
       val counts = inst.virtualEntities.map(ve =>
         ve.name -> InstanceInit.materializeVirtualEntity(s, ve, dir))
-      println(counts.map { case (n, c) => s"${js(n)}:$c" }
+      println(counts.map { case (n, c) => s"${quote(n)}:$c" }
         .mkString("{", ",", "}"))
 
     case "relation" :: "list" :: base :: Nil =>
@@ -1287,7 +1262,7 @@ object Main {
         if (!fs.exists(p)) Seq.empty
         else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
           .sorted.toSeq
-      println(names.map(js).mkString("[", ",", "]"))
+      println(names.map(quote).mkString("[", ",", "]"))
 
     // `minerva relation create|remove` (commands/relation.py:22-61,
     // 133-160): install a relation definition into the instance /
@@ -1307,7 +1282,7 @@ object Main {
       val dir = java.nio.file.Paths.get(instanceDir, "relation")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.writeString(dir.resolve(s"${r.name}.yaml"), text)
-      println(s"""{"relation":${js(r.name)},"created":true}""")
+      println(s"""{"relation":${quote(r.name)},"created":true}""")
 
     case "relation" :: "remove" :: instanceDir :: base :: name :: Nil =>
       if (name.contains("/")) {
@@ -1327,7 +1302,7 @@ object Main {
       val fs = graft.core.HadoopFs.forPath(spark(), base)
       val droppedEdges = fs.delete(
         new org.apache.hadoop.fs.Path(s"$base/relation/$name"), true)
-      println(s"""{"relation":${js(name)},"removed":$existed,""" +
+      println(s"""{"relation":${quote(name)},"removed":$existed,""" +
         s""""dropped_edges":$droppedEdges}""")
 
     case "trigger" :: base :: part :: yamlPath :: outDir :: Nil =>
@@ -1343,7 +1318,7 @@ object Main {
       val out = TriggerOps.createNotifications(kpi, rule).persist()
       try {
         out.write.mode("append").parquet(outDir)
-        println(s"""{"rule":${js(t.name)},"notifications":${out.count()}}""")
+        println(s"""{"rule":${quote(t.name)},"notifications":${out.count()}}""")
       } finally out.unpersist()
 
     // Retention expiry (reference commands/partition.py remove-old):

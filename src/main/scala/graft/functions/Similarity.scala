@@ -1946,7 +1946,7 @@ object Similarity {
       vecCol: String, bucketCol: String, codeCol: String,
       centroids: Seq[(Int, Seq[Float])],
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int, nProbe: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(index, idCol, "ivfPqTopKResidual")
     val sub = codebooks.head.head._2.length
     val spark = queries.sparkSession
@@ -1973,7 +1973,6 @@ object Similarity {
         dot(slice(col("__qv"), col("j") * lit(sub) + 1, lit(sub)),
           col("__cvec")).as("qdot"),
         col("cn2"))
-    val dtMaybeBcast = if (broadcastDistanceTable) broadcast(dt) else dt
     val cand = probes.select(col("query_id"), col("__bucket"))
       .join(index.select(col(idCol).as("neighbor_id"),
         col(bucketCol).cast("int").as("__bucket"), col(codeCol).as("__pq")),
@@ -1984,7 +1983,7 @@ object Similarity {
       .select(col("query_id"), col("__bucket"), col("neighbor_id"),
         col("j").cast("int").as("j"), col("code").cast("int").as("code"))
     adcEstimateRerank(
-      cand.join(dtMaybeBcast, Seq("query_id", "__bucket", "j", "code")),
+      cand.join(broadcast(dt), Seq("query_id", "__bucket", "j", "code")),
       queries, corpus, idCol, vecCol, k, shortlist, codebooks.length)
   }
 
@@ -2100,17 +2099,13 @@ object Similarity {
     * cosines, ADC-selected candidates.
     *
     * Broadcast bound: the distance table carries |queries|·m·k rows
-    * (2048 per query at the canonical m=8, k=256), so the broadcast path
-    * is sized for interactive query sets — ~10⁴ queries ≈ 20M small rows
-    * against the default 8 GB broadcast ceiling. For a batch query set
-    * beyond that (e.g. all-corpus self-retrieval), pass
-    * `broadcastDistanceTable = false`: the candidate join shuffles on
-    * (j, code) instead — same rows, exchange cost instead of a broadcast
-    * that would exceed the limit. */
+    * (2048 per query at the canonical m=8, k=256), so the broadcast is
+    * sized for interactive query sets — ~10⁴ queries ≈ 20M small rows
+    * against the default 8 GB broadcast ceiling. */
   def adcTopK(
       queries: DataFrame, codes: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(codes, idCol, "adcTopK")
     val m = codebooks.length
     val kCodes = codebooks.head.length
@@ -2121,7 +2116,7 @@ object Similarity {
         j => pmod(floor(col("pq_code") / pow(lit(kCodes), j.cast("double"))).cast("long"),
           lit(kCodes)).cast("int"))).as(Seq("j", "code")))
     adcTopKUnpacked(queries, unpacked, corpus, idCol, vecCol, codebooks, k,
-      shortlist, broadcastDistanceTable)
+      shortlist)
   }
 
   /** [[adcTopK]] over `array<smallint>` codes ([[pqCodeArray]]): identical
@@ -2131,14 +2126,14 @@ object Similarity {
   def adcTopKArray(
       queries: DataFrame, codes: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(codes, idCol, "adcTopKArray")
     val unpacked = codes.select(col(idCol).as("neighbor_id"),
         posexplode(col("pq_code")).as(Seq("j", "code")))
       .select(col("neighbor_id"), col("j").cast("int").as("j"),
         col("code").cast("int").as("code"))
     adcTopKUnpacked(queries, unpacked, corpus, idCol, vecCol, codebooks, k,
-      shortlist, broadcastDistanceTable)
+      shortlist)
   }
 
   /** Per-query ADC distance table: one row per (query, j, code) carrying
@@ -2178,15 +2173,10 @@ object Similarity {
       queries: DataFrame, unpacked: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String,
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     val q = adcDistanceTable(queries, idCol, vecCol, codebooks)
-    // fixed j-order fold for the estimated score: deterministic like every
-    // other float reduction in this module
-    // |queries|·m·k distance-table rows: broadcast for interactive query
-    // sets, shuffle on (j, code) when the caller knows the set is too
-    // large for the broadcast ceiling (see adcTopK scaladoc)
-    val qMaybeBcast = if (broadcastDistanceTable) broadcast(q) else q
-    adcEstimateRerank(unpacked.join(qMaybeBcast, Seq("j", "code")),
+    // |queries|·m·k distance-table rows, broadcast (see adcTopK scaladoc)
+    adcEstimateRerank(unpacked.join(broadcast(q), Seq("j", "code")),
       queries, corpus, idCol, vecCol, k, shortlist, codebooks.length)
   }
 
@@ -2283,14 +2273,14 @@ object Similarity {
       queries: DataFrame, codes: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[(Int, Seq[Float])],
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int, nProbe: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(codes, idCol, "ivfPqTopK")
     val assigned = corpus.select(col(idCol).as("neighbor_id"),
       ivfBucket(col(vecCol), centroids).as("__bucket"))
       .join(codes.select(col(idCol).as("neighbor_id"), col("pq_code")),
         Seq("neighbor_id"))
     ivfPqAssigned(queries, assigned, corpus, idCol, vecCol, centroids,
-      codebooks, k, nProbe, shortlist, broadcastDistanceTable)
+      codebooks, k, nProbe, shortlist)
   }
 
   /** [[ivfPqTopK]] against a STORED index frame carrying BOTH the bucket
@@ -2303,28 +2293,27 @@ object Similarity {
       vecCol: String, bucketCol: String, codeCol: String,
       centroids: Seq[(Int, Seq[Float])],
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int, nProbe: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(index, idCol, "ivfPqTopKStored")
     val assigned = index.select(col(idCol).as("neighbor_id"),
       col(bucketCol).cast("int").as("__bucket"), col(codeCol).as("pq_code"))
     ivfPqAssigned(queries, assigned, corpus, idCol, vecCol, centroids,
-      codebooks, k, nProbe, shortlist, broadcastDistanceTable)
+      codebooks, k, nProbe, shortlist)
   }
 
   private def ivfPqAssigned(
       queries: DataFrame, assigned: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, centroids: Seq[(Int, Seq[Float])],
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int, nProbe: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean): DataFrame =
+      shortlist: Int): DataFrame =
     ivfPqProbed(probeCells(queries, idCol, vecCol, centroids, nProbe),
-      queries, assigned, corpus, idCol, vecCol, codebooks, k, shortlist,
-      broadcastDistanceTable)
+      queries, assigned, corpus, idCol, vecCol, codebooks, k, shortlist)
 
   private def ivfPqProbed(
       probes: DataFrame, queries: DataFrame, assigned: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean): DataFrame = {
+      shortlist: Int): DataFrame = {
     // candidate (query, neighbor, j, code) rows: probe-cell equi-join
     // gates the corpus BEFORE any code is unpacked — rows ∝
     // |queries|·(corpus·nProbe/k)·m, never corpus·|queries|
@@ -2337,10 +2326,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         col("j").cast("int").as("j"), col("code").cast("int").as("code"))
     val dt = adcDistanceTable(queries, idCol, vecCol, codebooks)
-    val dtMaybeBcast = if (broadcastDistanceTable) broadcast(dt) else dt
     // keyed by query_id as well — each candidate only meets ITS query's
     // distance-table rows, unlike the full-scan path's (j, code) join
-    adcEstimateRerank(cand.join(dtMaybeBcast, Seq("query_id", "j", "code")),
+    adcEstimateRerank(cand.join(broadcast(dt), Seq("query_id", "j", "code")),
       queries, corpus, idCol, vecCol, k, shortlist, codebooks.length)
   }
 
@@ -2360,7 +2348,7 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Int, Seq[Float])],
       codebooks: Seq[Seq[(Int, Seq[Float])]], k: Int, nProbe: Int,
-      shortlist: Int, broadcastDistanceTable: Boolean = true): DataFrame = {
+      shortlist: Int): DataFrame = {
     requireIntegralId(queries, idCol, "ivfPqTopKStoredPruned")
     require(ps.config.partitionSizeSeconds == 1L,
       "ivfPqTopKStoredPruned requires a by-bucket index store " +
@@ -2378,7 +2366,7 @@ object Similarity {
     val assigned = stored.select(col("entity_id").as("neighbor_id"),
       col("bucket").cast("int").as("__bucket"), col("pq_code"))
     ivfPqProbed(probes, queries, assigned, corpus, idCol, vecCol,
-      codebooks, k, shortlist, broadcastDistanceTable)
+      codebooks, k, shortlist)
   }
 
   /** Write one ingest batch's IVF-PQ index columns — bucket + PQ code

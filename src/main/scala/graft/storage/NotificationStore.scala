@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Json
 import graft.model.AttributeDef
 
 /** Notification store: append-only event/notification table per data source
@@ -161,16 +162,10 @@ object NotificationStore {
   private[storage] def writeDeclaration(
       fs: FileSystem, basePath: String, attrs: Seq[AttributeDef]): Unit = {
     fs.mkdirs(new Path(basePath))
-    // JSON-escape the name: a quote/backslash/control char rendered raw
+    // JSON-quote the name: a quote/backslash/control char rendered raw
     // would make the declaration unparseable for every later writer
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val json = attrs.map(a =>
-        s"""{"name":"${esc(a.name)}","data_type":"${a.dataType.name}"}""")
+        s"""{"name":${Json.quote(a.name)},"data_type":"${a.dataType.name}"}""")
       .mkString("[", ",", "]")
     val out = fs.create(declFile(basePath), true)
     out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -835,21 +835,6 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("empty corpus"))
   }
 
-  test("ADC shuffle-join fallback returns the broadcast path's exact rows") {
-    // |queries|·m·k distance-table rows outgrow the broadcast ceiling for
-    // large query sets; broadcastDistanceTable=false swaps the hint for a
-    // shuffle on (j, code) — same rows, different exchange
-    val cbs = Similarity.pqCodebooksRefined(
-      clustered, "vec_id", "embedding", m = 4, k = 4, dim = dim)
-    val codes = Similarity.pqEncodeArray(clustered, "vec_id", "embedding", cbs)
-    val queries = clustered.filter(col("vec_id") < 10)
-    def rows(bcast: Boolean) =
-      Similarity.adcTopKArray(queries, codes, clustered, "vec_id", "embedding",
-          cbs, k = 3, shortlist = 10, broadcastDistanceTable = bcast)
-        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    assert(rows(bcast = false) == rows(bcast = true))
-  }
-
   test("bucketed rerank cos equals the exact cosine") {
     val pairs = Similarity.bucketedNeighborsGaussian(
         clustered, "vec_id", "embedding", 4, dim, 42L, minCos = -1.0)

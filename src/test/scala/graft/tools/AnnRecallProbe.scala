@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.functions.Similarity
 
@@ -13,10 +13,7 @@ import graft.functions.Similarity
 object AnnRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val queries = e.filter(col("vec_id") % 100 === 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.TemporalOps
@@ -13,10 +12,7 @@ object AsofPerfProbe {
     val nL = args.headOption.map(_.toLong).getOrElse(5000000L)
     val nR = args.lift(1).map(_.toLong).getOrElse(500000L)
     val nK = args.lift(2).map(_.toLong).getOrElse(1000L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
     val left = spark.range(nL).select(
       (col("id") % nK).as("k"),

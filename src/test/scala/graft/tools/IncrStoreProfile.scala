@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-phase wall-clock profile of the q332 incremental-keeper pipeline —
@@ -11,13 +11,7 @@ import org.apache.spark.sql.functions._
 object IncrStoreProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.Dedup
     val d = graft.Tables.load(spark, sfDir, "documents").select("doc_id", "text")

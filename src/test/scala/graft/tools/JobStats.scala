@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 /** Execution-shape probe for a gate: runs `queries(name)` construction +
@@ -14,13 +13,7 @@ object JobStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicLong
     val stages = new AtomicLong

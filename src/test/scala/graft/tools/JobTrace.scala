@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job trace for ONE gate: job id, duration, task count and the
@@ -11,13 +10,7 @@ object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     case class J(id: Int, var start: Long = 0, var end: Long = 0,
       var tasks: Int = 0, var desc: String = "")

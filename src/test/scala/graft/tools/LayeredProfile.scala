@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-phase wall-clock profile of the q234 layered-incremental-graph
@@ -13,13 +12,7 @@ import org.apache.spark.sql.functions._
 object LayeredProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.Similarity
     val e = graft.Tables.load(spark, sfDir, "embeddings")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 import graft.functions.Similarity
 
@@ -10,10 +9,7 @@ import graft.functions.Similarity
   * where layered recall >= flat at fewer scored candidates. */
 object LayeredSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dim = 16

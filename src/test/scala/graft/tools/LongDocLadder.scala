@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{CorpusClean, Dedup, TextAnalysis}
@@ -28,12 +28,7 @@ object LongDocLadder {
   def main(args: Array[String]): Unit = {
     val baseL = args.headOption.map(_.toInt).getOrElse(25000)
     val nDocs = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     // doc pair (2i, 2i+1) shares its first `sharedRun` tokens (seed =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -11,10 +10,7 @@ import graft.functions.Similarity
 object OpqProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.Tables.load(spark, sfDir, "embeddings").localCheckpoint()
     def t[A](tag: String)(f: => A): A = {

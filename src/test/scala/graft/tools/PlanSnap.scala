@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Formatted-plan snapshots for a list of gates:
   * `sbt "Test/runMain graft.tools.PlanSnap <sfDir> <outDir> <q1,q2,...|ALL>"`
   * writes `<outDir>/<query>.txt` with `.explain("formatted")` output.
-  * Bench session shape (local[32]/32 shuffle partitions) so Exchange
+  * Bench session (`SPARK_GRAFT_CPUS` cores, default 32) so Exchange
   * counts and join strategies match what the bench actually executes.
   * NOTE: constructing an incremental gate's frame RUNS its store cycles —
   * plan capture for those gates costs one gate execution at the given SF. */
@@ -17,13 +16,7 @@ object PlanSnap {
     val names: Seq[String] =
       if (args(2) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {

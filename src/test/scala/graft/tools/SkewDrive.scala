@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -83,21 +83,21 @@ object SkewDrive {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(50000L)
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("skew-drive")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256k")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // uncompressed shuffle blocks, so the skew thresholds below are in
+    // row bytes; core confs are fixed at context start, hence sys.props
+    sys.props("spark.shuffle.compress") = "false"
+    sys.props("spark.shuffle.spill.compress") = "false"
+    val spark = graft.Session.local(graft.Session.cores(8))
+    Seq(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
 
     // Zipf-skewed corpus: every doc carries 4 unique filler tokens; a
     // geometric (Zipf-like) share additionally carries one of 8 promo

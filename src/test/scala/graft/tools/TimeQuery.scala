@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc single-query timing with the Bench session shape (local[32],
-  * 32 shuffle partitions, min of two warm repetitions after a cold run):
+/** Ad-hoc single-query timing on the Bench session (`SPARK_GRAFT_CPUS`
+  * cores, default 32; min of two warm repetitions after a cold run):
   * `sbt "Test/runMain graft.tools.TimeQuery <sfDir> <q1,q2,...>"` —
   * the focused loop for checking one gate's cost without paying the
   * full-inventory bench. */
@@ -12,13 +11,7 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq.empty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       val fn = graft.SparkEntry.queries(n)

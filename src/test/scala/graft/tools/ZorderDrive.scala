@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.storage.{PartStore, PartStoreConfig}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence drive: the opt-in z-order write path
@@ -13,15 +12,12 @@ import org.apache.spark.sql.functions._
   * scan, so fewer scan-output rows = stats actually pruned). */
 object ZorderDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // many write tasks → ~16 files per pindex dir, each covering a
-      // 1/16th Morton rectangle — the unit the reader can skip (top 4
-      // zkey bits fixed per file = both dims bounded to quarter ranges)
-      .config("spark.sql.shuffle.partitions", "512")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
+    // many write tasks → ~16 files per pindex dir, each covering a
+    // 1/16th Morton rectangle — the unit the reader can skip (top 4
+    // zkey bits fixed per file = both dims bounded to quarter ranges)
+    spark.conf.set("spark.sql.shuffle.partitions", "512")
     val events = graft.Tables.load(spark, "/root/testdata/sf0.1", "events")
       .select(
         col("user_id").as("entity_id"),
