@@ -5,8 +5,8 @@ import graft.core.MinervaType
 import graft.model.InstanceModel
 import graft.operators._
 import graft.sources.{CsvSourceConfig, CsvTrendSource, SampleDataGen}
-import graft.storage.{PartStore, PartStoreConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.storage.{ParquetFiles, PartStore, PartStoreConfig}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thin command layer mirroring the reference's `minerva` CLI
@@ -1221,7 +1221,7 @@ object Main {
         val out = TriggerOps.createNotifications(kpi, InstanceInit.triggerRule(t))
           .persist()
         try {
-          out.write.mode("append").parquet(outDir)
+          ParquetFiles.write(out, outDir, SaveMode.Append)
           s"""${quote(t.name)}:${out.count()}"""
         } finally out.unpersist()
       }
@@ -1317,7 +1317,7 @@ object Main {
       // persist: one execution shared by the write and the reported count
       val out = TriggerOps.createNotifications(kpi, rule).persist()
       try {
-        out.write.mode("append").parquet(outDir)
+        ParquetFiles.write(out, outDir, SaveMode.Append)
         println(s"""{"rule":${quote(t.name)},"notifications":${out.count()}}""")
       } finally out.unpersist()
 

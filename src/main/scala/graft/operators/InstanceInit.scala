@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PgSqlCompat
 import graft.model.{Instance, Materialization, RelationDef, Trigger, VirtualEntityDef}
-import graft.storage.{EntityDirectory, PartStore}
+import graft.storage.{EntityDirectory, ParquetFiles, PartStore}
 
 /** Instance bring-up derivatives: materialize the virtual entities and
   * relations of a loaded instance bundle (the reference's
@@ -55,7 +55,7 @@ object InstanceInit {
       .select(col("source_id").cast("long"), col("target_id").cast("long"))
     // stage-then-swap is unnecessary here: relation sets are tiny and the
     // overwrite is atomic at the directory level for single-writer init
-    edges.write.mode("overwrite").parquet(s"$outBase/${rel.name}")
+    ParquetFiles.write(edges, s"$outBase/${rel.name}", SaveMode.Overwrite)
     spark.read.parquet(s"$outBase/${rel.name}").count()
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.storage.PartStore
+import graft.storage.{ParquetFiles, PartStore}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,13 +26,20 @@ final case class MaterializationSpec(
 
 class MaterializationRunner(spark: SparkSession, parts: PartStore, statePath: String) {
 
+  private val StateSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("chunk BIGINT, fingerprint STRING")
+
+  private def fs = graft.core.HadoopFs.forPath(spark, statePath)
+
+  /** The processed (chunk, fingerprint) state of one target; empty only
+    * when no state was ever written. Any other read failure (a corrupt or
+    * unreadable state file) propagates: treating it as "no state" would
+    * silently mark every chunk stale and recompute it. */
   def state(target: String): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("chunk", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("fingerprint", org.apache.spark.sql.types.StringType))))
-    try spark.read.parquet(s"$statePath/$target") catch { case _: Exception => empty }
+    val p = s"$statePath/$target"
+    if (fs.exists(new org.apache.hadoop.fs.Path(p))) spark.read.schema(StateSchema).parquet(p)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StateSchema)
   }
 
   /** One scheduler pass; returns the chunks materialized. Newest-first with
@@ -60,8 +67,7 @@ class MaterializationRunner(spark: SparkSession, parts: PartStore, statePath: St
       val merged = state(spec.target).join(processed, Seq("chunk"), "left_anti")
         .unionByName(processed)
       val tmp = s"$statePath/${spec.target}__tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      val fs = graft.core.HadoopFs.forPath(spark, statePath)
+      ParquetFiles.write(merged, tmp, SaveMode.Overwrite)
       val dst = new org.apache.hadoop.fs.Path(s"$statePath/${spec.target}")
       fs.delete(dst, true)
       fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)

@@ -112,8 +112,8 @@ class AttributeStore(spark: SparkSession, basePath: String, buckets: Int = 16) {
     // batches are entity-metadata-sized; a bucket per task is the right
     // chunking at any scale)
     val arranged = if (flat) toWrite else toWrite.repartition(col("abucket"))
-    val w = arranged.write.mode(SaveMode.Append).option("mergeSchema", "true")
-    (if (flat) w else w.partitionBy("abucket")).parquet(historyPath)
+    ParquetFiles.write(arranged, historyPath, SaveMode.Append,
+      if (flat) Nil else Seq("abucket"))
   }
 
   /** One entity's full attribute history — on the bucketed layout the
@@ -144,8 +144,8 @@ class AttributeStore(spark: SparkSession, basePath: String, buckets: Int = 16) {
   def materializeCompacted(): Long = history match {
     case None => 0L
     case Some(h) =>
-      compacted(valueColumns(h)).get
-        .write.mode(SaveMode.Overwrite).parquet(s"$basePath/compacted")
+      ParquetFiles.write(compacted(valueColumns(h)).get, s"$basePath/compacted",
+        SaveMode.Overwrite)
       spark.read.parquet(s"$basePath/compacted").count()
   }
 
@@ -172,7 +172,7 @@ class AttributeStore(spark: SparkSession, basePath: String, buckets: Int = 16) {
   def materializeCurrent(): Long = current match {
     case None => 0L
     case Some(cur) =>
-      cur.write.mode(SaveMode.Overwrite).parquet(s"$basePath/current")
+      ParquetFiles.write(cur, s"$basePath/current", SaveMode.Overwrite)
       spark.read.parquet(s"$basePath/current").count()
   }
 
@@ -207,7 +207,7 @@ class AttributeStore(spark: SparkSession, basePath: String, buckets: Int = 16) {
           snap.unionByName(fresh, allowMissingColumns = true),
           "entity_id", Seq("timestamp", "modified"))
         val tmp = s"$basePath/current.next"
-        next.write.mode(SaveMode.Overwrite).parquet(tmp)
+        ParquetFiles.write(next, tmp, SaveMode.Overwrite)
         val live = new org.apache.hadoop.fs.Path(s"$basePath/current")
         // rename-aside swap (PartStore's protocol): the old snapshot is
         // never DELETED before its replacement lands — a crash inside the

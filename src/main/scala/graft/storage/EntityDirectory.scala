@@ -75,7 +75,7 @@ class EntityDirectory(spark: SparkSession, basePath: String) {
       .persist()
     val n = withIds.count()
     if (n > 0)
-      withIds.write.mode(SaveMode.Append).parquet(path(entityType).toString)
+      ParquetFiles.write(withIds, path(entityType).toString, SaveMode.Append)
     withIds.unpersist()
     n
   }

@@ -39,15 +39,15 @@ class JobLog(spark: SparkSession, basePath: String) {
   def startJob(description: String, nowSec: Long): Long = {
     val id = raw.map(_.agg(coalesce(max("job_id"), lit(0L)).cast("long"))
       .first().getLong(0)).getOrElse(0L) + 1L
-    eventDf(Seq((id, description, "start", nowSec)))
-      .write.mode(SaveMode.Append).parquet(logPath)
+    ParquetFiles.write(eventDf(Seq((id, description, "start", nowSec))), logPath,
+      SaveMode.Append)
     id
   }
 
   /** Record completion (logging/__init__.py:15-22). */
   def endJob(jobId: Long, nowSec: Long): Unit =
-    eventDf(Seq((jobId, "", "end", nowSec)))
-      .write.mode(SaveMode.Append).parquet(logPath)
+    ParquetFiles.write(eventDf(Seq((jobId, "", "end", nowSec))), logPath,
+      SaveMode.Append)
 
   /** Current job table: (job_id, description, started, finished?) — the
     * empty case carries the full schema so downstream selects/joins work

@@ -120,8 +120,8 @@ class NotificationStore(
     }
 
   def store(batch: DataFrame, nowSec: Long): Unit =
-    conform(batch).withColumn("created", lit(nowSec))
-      .write.mode(SaveMode.Append).option("mergeSchema", "true").parquet(basePath)
+    ParquetFiles.write(conform(batch).withColumn("created", lit(nowSec)),
+      basePath, SaveMode.Append)
 
   /** All notifications; PK (entity_id, timestamp, rule) deduped last-wins
     * by created stamp. */

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 /** Physical trend-part storage on parquet: the A5-A8 write path re-expressed
   * without a transactional table format.
   *
+  * Files: zstd parquet, written only through [[ParquetFiles.write]].
+  *
   * Layout: one directory per part, partitioned by `pindex`
   * (Granularity.timestampToIndex of the row timestamp — the reference's
   * range partitions, src/minerva/commands/partition.py:50-124). Time-range
@@ -427,8 +429,7 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
           .sortWithinPartitions(col("pindex"), col("__zkey"))
           .drop("__zkey")
     }
-    arranged
-      .write.mode(SaveMode.Overwrite).partitionBy("pindex").parquet(staging)
+    ParquetFiles.write(arranged, staging, SaveMode.Overwrite, Seq("pindex"))
     val indices = listStagedPindexes(staging)
     // metadata-only guards, BEFORE the sidecar publish and the swaps:
     // a merge's staged set must cover every collected batch pindex (a
@@ -641,8 +642,8 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
     val df = if (df0.columns.contains("pindex")) df0 else withPindex(df0)
     val rewriteDir = path(part) + "__rewrite"
     fs.delete(hp(rewriteDir), true)
-    df.repartition(col("pindex"))
-      .write.mode(SaveMode.Overwrite).partitionBy("pindex").parquet(rewriteDir)
+    ParquetFiles.write(df.repartition(col("pindex")), rewriteDir,
+      SaveMode.Overwrite, Seq("pindex"))
     // indices from the STAGED dir listing, not a distinct().collect() on
     // the plan — that would EXECUTE the full merge plan a second time
     // just to count partitions the write already materialized
@@ -704,14 +705,19 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
 
   /** Modified-log append (I1): one row per (part, timestamp) in the batch —
     * the writer-maintained analogue of trend_directory.mark_modified. */
-  def markModified(part: String, batch: DataFrame, nowSec: Long): Unit = {
-    batch.select(col("timestamp")).distinct()
-      .withColumn("part", lit(part))
-      .withColumn("modified", lit(nowSec))
-      .write.mode(SaveMode.Append).parquet(s"$basePath/_modified_log")
-    }
+  def markModified(part: String, batch: DataFrame, nowSec: Long): Unit =
+    ParquetFiles.write(
+      batch.select(col("timestamp").cast("long").as("timestamp")).distinct()
+        .withColumn("part", lit(part))
+        .withColumn("modified", lit(nowSec)),
+      s"$basePath/$ModifiedLog", SaveMode.Append)
 
   private val ModifiedLog = "_modified_log"
+
+  /** The log's declared read schema: [[markModified]] writes exactly these
+    * types, so a read needs no footer-inference job. */
+  private val ModifiedLogSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "timestamp BIGINT, part STRING, modified BIGINT")
 
   /** Test seam: runs between the compaction's staged fold and the
     * live→aside swap — the window where a concurrent markModified lands. */
@@ -728,7 +734,8 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
       else fs.delete(aside, true) // post-swap crash: aside is stale
     }
     fs.delete(hp(s"$basePath/${ModifiedLog}__compact"), true)
-    if (fs.exists(dir)) Some(spark.read.parquet(dir.toString)) else None
+    if (fs.exists(dir)) Some(spark.read.schema(ModifiedLogSchema).parquet(dir.toString))
+    else None
   }
 
   /** `trend-store process-modified-log` (reference trend_store.py:908-966
@@ -754,10 +761,11 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
       // dedups — never loses one.
       val preFold = fs.listStatus(live).map(_.getPath.getName).toSet
       val staged = s"$basePath/${ModifiedLog}__compact"
-      log.groupBy(col("part"), col("timestamp"))
-        .agg(max(col("modified")).as("modified"))
-        .write.mode(SaveMode.Overwrite).parquet(staged)
-      val n = spark.read.parquet(staged).count()
+      ParquetFiles.write(
+        log.groupBy(col("part"), col("timestamp"))
+          .agg(max(col("modified")).as("modified")),
+        staged, SaveMode.Overwrite)
+      val n = spark.read.schema(ModifiedLogSchema).parquet(staged).count()
       compactInterleaveHook()
       val aside = hp(s"$basePath/.${ModifiedLog}_old")
       if (fs.exists(aside)) fs.delete(aside, true)
@@ -870,11 +878,12 @@ class PartStore(spark: SparkSession, cfg: PartStoreConfig) {
           val salt = pmod(xxhash64(keyCols.map(col): _*),
             element_at(wantMap, col("pindex")))
           val n = spark.sessionState.conf.numShufflePartitions
-          df.withColumn("__salt", salt)
-            .repartition(n, col("pindex"), col("__salt"))
-            .sortWithinPartitions(keyCols.map(col): _*)
-            .drop("__salt")
-            .write.mode(SaveMode.Overwrite).partitionBy("pindex").parquet(staging)
+          ParquetFiles.write(
+            df.withColumn("__salt", salt)
+              .repartition(n, col("pindex"), col("__salt"))
+              .sortWithinPartitions(keyCols.map(col): _*)
+              .drop("__salt"),
+            staging, SaveMode.Overwrite, Seq("pindex"))
           // no sidecar updates: contents, schema and zone ranges are
           // byte-for-byte the same rows — only the file layout changed
           swapStaged(part, staging, cands.map(_._1))

@@ -215,7 +215,7 @@ class TagDirectory(spark: SparkSession, basePath: String) {
       .persist() // one anti-join serves both the count and the append
     val n = missing.count()
     if (n > 0)
-      missing.write.mode(SaveMode.Append).parquet(linkPath.toString)
+      ParquetFiles.write(missing, linkPath.toString, SaveMode.Append)
     missing.unpersist()
     n
   }
@@ -250,8 +250,8 @@ class TagDirectory(spark: SparkSession, basePath: String) {
       val kept = existing.join(
         changed.select("tag_group", "entity_id").distinct(),
         Seq("tag_group", "entity_id"), "left_anti")
-      kept.unionByName(changed)
-        .write.mode(SaveMode.Overwrite).parquet(stagedPath(linkPath).toString)
+      ParquetFiles.write(kept.unionByName(changed),
+        stagedPath(linkPath).toString, SaveMode.Overwrite)
       swapIn(linkPath)
     }
     changed.unpersist()
@@ -263,8 +263,8 @@ class TagDirectory(spark: SparkSession, basePath: String) {
     * staged rewrite-then-swap of the whole table is control-plane cost;
     * the aside-protocol swap keeps a crash at ANY point recoverable. */
   def flushTag(tag: String): Unit = withTableLease(linkPath) {
-    links.filter(col("tag") =!= lower(lit(tag)))
-      .write.mode(SaveMode.Overwrite).parquet(stagedPath(linkPath).toString)
+    ParquetFiles.write(links.filter(col("tag") =!= lower(lit(tag))),
+      stagedPath(linkPath).toString, SaveMode.Overwrite)
     swapIn(linkPath)
   }
 
@@ -308,7 +308,7 @@ class TagDirectory(spark: SparkSession, basePath: String) {
       .persist()
     val n = missing.count()
     if (n > 0)
-      missing.write.mode(SaveMode.Append).parquet(namePath.toString)
+      ParquetFiles.write(missing, namePath.toString, SaveMode.Append)
     missing.unpersist()
     n
   }
@@ -316,8 +316,8 @@ class TagDirectory(spark: SparkSession, basePath: String) {
   /** Remove one metadata tag's links (`flush_tag_links`,
     * attribute/tag.py:63-77) — aside-protocol swap like [[flushTag]]. */
   def flushNameTag(tag: String): Unit = withTableLease(namePath) {
-    nameLinks.filter(col("tag") =!= lower(lit(tag)))
-      .write.mode(SaveMode.Overwrite).parquet(stagedPath(namePath).toString)
+    ParquetFiles.write(nameLinks.filter(col("tag") =!= lower(lit(tag))),
+      stagedPath(namePath).toString, SaveMode.Overwrite)
     swapIn(namePath)
   }
 

@@ -75,6 +75,29 @@ class MaterializationRunnerSpec extends SparkSpec {
     assert(runner.run(spec, fp(source), nowSec = 10060).nonEmpty)
   }
 
+  test("a corrupt state file makes run() throw instead of recomputing every chunk") {
+    val base = "target/tmp/matrunner_corrupt"
+    val fsys = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fsys.delete(new org.apache.hadoop.fs.Path(base), true)
+    val ps = new PartStore(spark, PartStoreConfig(s"$base/parts", 86400))
+    val source = Seq((1L, 100L, 2.0, 50L))
+      .toDF("entity_id", "timestamp", "value", "modified")
+      .withColumn("hr", lit(0L))
+    val spec = MaterializationSpec("hourly",
+      chunk => source.select(col("entity_id"), lit(chunk).as("timestamp"),
+        col("value"), col("modified")),
+      stabilityDelaySec = 0, retentionSec = 1000000L)
+    val runner = new MaterializationRunner(spark, ps, s"$base/state")
+    assert(runner.run(spec, fp(source), nowSec = 10000) == Seq(0L))
+    // replace the state table's data with bytes that are not parquet
+    val state = new org.apache.hadoop.fs.Path(s"$base/state/hourly")
+    fsys.delete(state, true)
+    fsys.mkdirs(state)
+    val out = fsys.create(new org.apache.hadoop.fs.Path(state, "part-00000.parquet"))
+    try out.write("not a parquet file".getBytes("UTF-8")) finally out.close()
+    intercept[Exception](runner.run(spec, fp(source), nowSec = 10000))
+  }
+
   test("attribute store: history, compaction, current") {
     val base = "target/tmp/attrstore"
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
